@@ -153,7 +153,7 @@ class Build:
         return flagship_scan(self.spark, path or self.path, zoom=ZOOM, n_polygons=N_POLYGONS).collect()
 
     def measure(self, seconds: float) -> dict:
-        return common.measure_ops(self, seconds)
+        return common.measure_ops(self, seconds, min_ops=3)
 
     def op(self) -> dict:
         rows, dt = common.timed(self.job)
@@ -170,7 +170,8 @@ class Build:
 
     # -- per-layer ---------------------------------------------------------
 
-    def layers(self, rec) -> dict:
+    def layers(self, rec) -> tuple[dict, list[str]]:
+        """Per-layer metrics, and the check failures of the traced job."""
         from pyspark.sql import functions as F
 
         from versatiles_rs_spark import codecs, fixtures, tile_math
@@ -181,7 +182,8 @@ class Build:
         sc = self.spark.sparkContext
         m = {}
         with rec.span("pipeline"), common.spark_jobs(sc, "pipeline") as jobs:
-            self.job()
+            rows = self.job()
+        errors = check_aggregate(rows, self.expected)
         m["pipeline.spark_jobs"] = jobs["jobs"]
         m["pipeline.spark_tasks"] = jobs["tasks"]
 
@@ -232,7 +234,7 @@ class Build:
                 x, y = tile_math.lonlat_to_tile(lon, lat, ZOOM)
                 tile_math.hilbert_index(np.full(len(x), ZOOM), x, y)
             m["tile_math.ns_per_point"] = (time.perf_counter() - t0) / (reps * len(lon)) * 1e9
-        return m
+        return m, errors
 
     def _candidate_pairs(self, polygon_cover_cells) -> int:
         """(point, polygon) pairs sharing a cover cell: the rows the exact

@@ -12,6 +12,7 @@ import itertools
 import math
 import os
 import shutil
+import statistics
 import sys
 import threading
 import time
@@ -60,6 +61,9 @@ def start_spark(work: str, app: str):
             "spark.local.dir": os.path.join(work, "spark-local"),
             "spark.sql.warehouse.dir": os.path.join(work, "warehouse"),
             "spark.ui.showConsoleProgress": "false",
+            # a fixed heap: with only -Xmx the JVM grew its heap at a
+            # different point in each run and its RSS varied by 40%
+            "spark.driver.extraJavaOptions": f"-Xms{DRIVER_MEMORY}",
         },
     )
 
@@ -196,12 +200,14 @@ class PeakRss:
         return self.peak_kb / 1024.0
 
 
-def measure_ops(w, seconds: float) -> dict:
-    """Repeat `w.op()` until `seconds` of measured time; end-to-end metrics
-    over the operations (each a dict of seconds, items, out_bytes, in_bytes,
-    errors)."""
+def measure_ops(w, seconds: float, min_ops: int = 1) -> dict:
+    """Repeat `w.op()` until `seconds` of measured time and at least
+    `min_ops` operations; end-to-end metrics over the operations (each a
+    dict of seconds, items, out_bytes, in_bytes, errors).  `p50_ms` is the
+    median operation, `throughput_per_s` is items over the summed wall
+    times of the same operations."""
     ops = []
-    while not ops or sum(o["seconds"] for o in ops) < seconds:
+    while len(ops) < min_ops or sum(o["seconds"] for o in ops) < seconds:
         ops.append(w.op())
     walls = [o["seconds"] * 1e3 for o in ops]
     return {
@@ -210,7 +216,7 @@ def measure_ops(w, seconds: float) -> dict:
         "failed": sum(1 for o in ops if o["errors"]),
         "metrics": {
             "throughput_per_s": sum(o["items"] for o in ops) / sum(o["seconds"] for o in ops),
-            "p50_ms": percentile(walls, 0.5),
+            "p50_ms": statistics.median(walls),
             "bytes_per_byte": sum(o["out_bytes"] for o in ops) / sum(o["in_bytes"] for o in ops),
         },
     }

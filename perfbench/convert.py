@@ -95,7 +95,9 @@ class Convert:
             "errors": errors,
         }
 
-    def layers(self, rec) -> dict:
+    def layers(self, rec) -> tuple[dict, list[str]]:
+        """Per-layer metrics, and the check failures of the archive the
+        traced write produced."""
         from pyspark.sql import functions as F
 
         from versatiles_rs_spark import udfs
@@ -127,4 +129,4 @@ class Convert:
             m["pmtiles.readback_s"] = time.perf_counter() - t0
         addressed, _, contents = header_counts(self.dst)
         m["pmtiles.dedup_ratio"] = contents / addressed
-        return m
+        return m, check_archive(self.readback(), self.expected, self.dst)

@@ -290,10 +290,14 @@ def vector_pyramid(seed: int, max_zoom: int, present_share: float) -> dict:
     return tiles
 
 
+def stored_vector_tile(mvt: bytes) -> bytes:
+    return gzip.compress(mvt, 6, mtime=0)
+
+
 def write_vector_pmtiles(path: str, tiles: dict) -> int:
     """Store the MVT pyramid gzip-compressed (the common PMTiles layout);
     returns the archive size."""
-    stored = {k: gzip.compress(v, 6, mtime=0) for k, v in tiles.items()}
+    stored = {k: stored_vector_tile(v) for k, v in tiles.items()}
     write_pmtiles(path, stored, tile_type=1, tile_compression=2,
                   meta={"name": "perfbench-vector", "format": "pbf"})
     return os.path.getsize(path)

@@ -11,9 +11,11 @@ object {"correct", "attempted", "failed", "metrics"}:
   seconds with tracing off.
 - `--trace 1`: the per-layer metrics.  A traced run sets up all three
   workloads and runs each layer call once inside spans, so every per-layer
-  metric is present whichever workload is named; the named workload's
-  pipeline is also run untraced, and the difference is the tracing
-  overhead.  Spans go to .perfbench-out/trace-<workload>-<seed>.jsonl.
+  metric is present whichever workload is named.  The tracing overhead is
+  measured on the serve open loop, the one path whose traced side records
+  nested spans (client -> server -> lookup / negotiation), by interleaving
+  blocks with tracing off and on.  Spans go to
+  .perfbench-out/trace-<workload>-<seed>.jsonl.
 
 Exit code 0 when every output check passed, 1 when one failed (the JSON
 line is still printed), 2 on an error, 3 when the program is not in the
@@ -91,29 +93,16 @@ def run_traced(ctx: Context, name: str, seconds: float, live: list) -> dict:
     convert.setup()
     serve.wait_ready()
     errors = serve.check(serve.warm_up())
-    open_s = max(2.0, seconds * 0.5)
-
-    base = {"build": build.op, "convert": convert.op, "serve": lambda: serve.untraced_op(open_s)}[name]()
-    errors += base["errors"]
 
     rec.enabled = True
-    m = build.layers(rec)
-    m.update(convert.layers(rec))
-    serve_m, serve_traced = serve.layers(rec, open_s)
+    m, build_errors = build.layers(rec)
+    convert_m, convert_errors = convert.layers(rec)
+    m.update(convert_m)
+    serve_m, serve_errors = serve.layers(rec, max(4.0, seconds))
     m.update(serve_m)
-    errors += serve_traced["errors"]
+    errors += build_errors + convert_errors + serve_errors
     rec.enabled = False
 
-    def span_s(span_name, op=None):
-        return next(s["end"] - s["start"] for s in rec.spans
-                    if s["name"] == span_name and (op is None or (s.get("attrs") or {}).get("op") == op))
-
-    traced = {
-        "build": span_s("pipeline"),
-        "convert": span_s("sources.pmtiles", "write"),
-        "serve": serve_traced["seconds"],
-    }[name]
-    m["trace.overhead_pct"] = (traced - base["seconds"]) / base["seconds"] * 100.0
     selfs = trace.self_times(rec.spans)
     for layer in LAYER_SPANS:
         m[f"self_s.{layer}"] = selfs.get(layer, 0.0)

@@ -3,9 +3,10 @@ mounts a seed-generated vector (MVT) PMTiles archive with
 `server.serve_tiles` over the cached `sources.pmtiles.read_pmtiles`
 relation (perfbench/server_main.py).
 
-Traffic: keys are Zipf-skewed over the archive's tiles, MISS_SHARE of the
-requests ask for tiles outside it (404), and Accept-Encoding is br, gzip or
-absent.  Phase 1 is an open loop of Poisson arrivals at OPEN_RATE_PER_CORE
+Traffic (sources in README.md): keys are Zipf-skewed over every z0..MAX_ZOOM
+key, so requests for keys the archive lacks get 404, and each request
+carries one of three Accept-Encoding headers that real clients send by
+default.  Phase 1 is an open loop of Poisson arrivals at OPEN_RATE_PER_CORE
 x nproc requests/s (about a quarter of what the warm server sustains), each
 request timed from its due time.  Phase 2 is a closed loop of nproc clients.  One
 process drives both, with at most nproc threads.
@@ -34,12 +35,15 @@ import numpy as np
 from . import common, inputs
 
 MAX_ZOOM = 6
-PRESENT_SHARE = 0.85
-MISS_SHARE = 0.10
-ZIPF_S = 0.8
-ENCODINGS = (("br", 0.4), ("gzip", 0.4), (None, 0.2))
+PRESENT_SHARE = 0.85  # of the z3+ keys; the rest are the 404s
+# Zipf exponent: the middle of the 0.64-0.83 range Breslau et al. (INFOCOM
+# 1999) measured for web request popularity.
+ZIPF_S = (0.64 + 0.83) / 2
+# Default Accept-Encoding of browsers over HTTPS, of Go net/http and OkHttp,
+# and of curl (none); drawn with equal odds.
+ENCODINGS = ("gzip, deflate, br", "gzip", None)
 OPEN_RATE_PER_CORE = 1.5
-OPEN_SHARE = 0.8  # of --seconds; the rest is the closed loop
+OPEN_SHARE = 0.6  # of --seconds; the rest is the closed loop
 READY_TIMEOUT_S = 150
 WARM_UP_S = 10.0
 
@@ -97,31 +101,32 @@ def check_response(status: int, body: bytes, encoding: str | None, key, tiles: d
 # ---------------------------------------------------------------------------
 
 class Traffic:
-    """Deterministic request stream: the i-th draw depends only on the seed."""
+    """Deterministic request stream: the i-th draw depends only on the seed.
+    Popularity ranks are a seed permutation of every z0..max_zoom key, so
+    the 404 share is the Zipf mass that falls on keys the archive lacks."""
 
-    def __init__(self, seed: int, tiles: dict, max_zoom: int):
+    def __init__(self, seed: int, max_zoom: int):
         rng = inputs.rng_for(seed, "traffic")
-        present = sorted(tiles)
-        self.present = [present[i] for i in rng.permutation(len(present))]
-        absent = [k for k in inputs.pyramid_keys(max_zoom) if k not in tiles]
-        z = max_zoom + 1
-        absent += [(z, int(x), int(y)) for x, y in rng.integers(0, 1 << z, size=(2000, 2))]
-        self.absent = absent
-        w = 1.0 / np.arange(1, len(self.present) + 1) ** ZIPF_S
+        keys = inputs.pyramid_keys(max_zoom)
+        self.keys = [keys[i] for i in rng.permutation(len(keys))]
+        w = 1.0 / np.arange(1, len(self.keys) + 1) ** ZIPF_S
         self.cdf = np.cumsum(w / w.sum())
         self.rng = rng
         self.lock = threading.Lock()
-        self.enc_cdf = np.cumsum([p for _, p in ENCODINGS])
 
     def next(self):
         with self.lock:
-            u_miss, u_key, u_enc = self.rng.random(3)
-        if u_miss < MISS_SHARE:
-            key = self.absent[int(u_key * len(self.absent))]
-        else:
-            key = self.present[min(int(np.searchsorted(self.cdf, u_key)), len(self.present) - 1)]
-        enc = ENCODINGS[int(np.searchsorted(self.enc_cdf, u_enc))][0]
-        return key, enc
+            u_key, u_enc = self.rng.random(2)
+        key = self.keys[min(int(np.searchsorted(self.cdf, u_key)), len(self.keys) - 1)]
+        return key, ENCODINGS[int(u_enc * len(ENCODINGS))]
+
+
+def stream_shares(results, tiles: dict) -> tuple[float, float]:
+    """(repeat-key share, 404 share) of a request stream: the share of
+    requests whose key an earlier request already asked for (the most a
+    tile cache could answer), and the share of keys outside the archive."""
+    keys = [r.key for r in results]
+    return 1.0 - len(set(keys)) / len(keys), sum(k not in tiles for k in keys) / len(keys)
 
 
 class Result:
@@ -167,7 +172,7 @@ class Serve:
         self.max_zoom = self.ctx.size(MAX_ZOOM, 4)
         self.tiles = inputs.vector_pyramid(self.ctx.seed, self.max_zoom, PRESENT_SHARE)
         inputs.write_vector_pmtiles(self.archive, self.tiles)
-        self.traffic = Traffic(self.ctx.seed, self.tiles, self.max_zoom)
+        self.traffic = Traffic(self.ctx.seed, self.max_zoom)
         cmd = [sys.executable, os.path.join(common.ROOT, "perfbench", "server_main.py"),
                "--archive", self.archive, "--work", os.path.join(self.ctx.work, "server")]
         if self.ctx.trace:
@@ -292,6 +297,9 @@ class Serve:
         ok = [r for r in opened + closed if r.status == 200]
         checked = warm + opened + closed
         errors = self.check(checked)
+        repeat, miss = stream_shares(checked, self.tiles)
+        print(f"serve: {len(checked)} requests, repeat-key share {repeat:.3f}, 404 share {miss:.3f}",
+              file=sys.stderr)
         return {
             "attempted": len(checked),
             "failed": len(errors),
@@ -303,43 +311,56 @@ class Serve:
             },
         }
 
-    def untraced_op(self, seconds: float) -> dict:
-        """An open loop with the server's spans off; `seconds` is its p50."""
-        res = self.open_loop(seconds)
-        return {"seconds": common.percentile([(r.end - r.due) for r in res], 0.5),
-                "errors": self.check(res)}
-
-    def layers(self, rec, seconds: float) -> tuple[dict, dict]:
-        """Per-layer metrics, and the traced open loop like `untraced_op`."""
+    def layers(self, rec, seconds: float) -> tuple[dict, list[str]]:
+        """Per-layer metrics, and the check failures of the open loops.
+        The open loop runs in four blocks of seconds/4 with tracing (the
+        server's spans and the client span) off, on, on, off, so a drift of
+        the host over the blocks cancels out of `trace.overhead_pct`."""
         status = []
         for _ in range(50):
             t0 = time.perf_counter()
             fetch(self.host, self.port, "/status", None)
             status.append((time.perf_counter() - t0) * 1e3)
-        self._send("trace on")
-        res = self.open_loop(seconds)
-        self._send("trace off")
+        blocks = {"off": [], "on": []}
+        for mode in ("off", "on", "on", "off"):
+            self._send(f"trace {mode}")
+            rec.enabled = mode == "on"
+            blocks[mode] += self.open_loop(seconds / 4)
+        rec.enabled = True
         dump = self.stop_server()
         rec.extend(dump["spans"])
         lookups = dump["lookups"]
-        neg = {"brotli": [], "gzip": []}
-        for s in dump["spans"]:
-            codec = (s.get("attrs") or {}).get("codec")
-            if s["name"] == "codecs" and codec in neg:
-                neg[codec].append((s["end"] - s["start"]) * 1e6)
+        neg = self.negotiate_us(rec)
+        p50 = {mode: common.percentile([r.end - r.due for r in res], 0.5) for mode, res in blocks.items()}
+        sent = blocks["off"] + blocks["on"]
         m = {
             "containers.get_tile_p50_ms": common.percentile([x["s"] for x in lookups], 0.5) * 1e3,
             "containers.jobs_per_lookup": sum(x["jobs"] for x in lookups) / len(lookups),
             "server.status_p50_ms": common.percentile(status, 0.5),
-            "codecs.negotiate_br_us": common.percentile(neg["brotli"], 0.5),
-            "codecs.negotiate_gzip_us": common.percentile(neg["gzip"], 0.5),
-            "serve.generator_lag_p99_ms": common.percentile([(r.start - r.due) * 1e3 for r in res], 0.99),
+            "codecs.negotiate_br_us": neg["br"],
+            "codecs.negotiate_gzip_us": neg["gzip"],
+            "serve.generator_lag_p99_ms": common.percentile([(r.start - r.due) * 1e3 for r in sent], 0.99),
             "pmtiles.read_s": self.ready["read_s"],
             "containers.tilejson_s": self.ready["tilejson_s"],
+            "trace.overhead_pct": (p50["on"] - p50["off"]) / p50["off"] * 100.0,
         }
-        traced = {"seconds": common.percentile([(r.end - r.due) for r in res], 0.5),
-                  "errors": self.check(res)}
-        return m, traced
+        return m, self.check(sent)
+
+    def negotiate_us(self, rec) -> dict:
+        """Content negotiation per stored (gzip) tile on one core, in us:
+        `br` recodes it for a client that accepts only br, `gzip` is the
+        pass-through every gzip-accepting client of the traffic gets."""
+        from versatiles_rs_spark.codecs import optimize_compression
+
+        blobs = [inputs.stored_vector_tile(self.tiles[k]) for k in sorted(self.tiles)[:200]]
+        out = {}
+        for name, accepted in (("br", {"br"}), ("gzip", {"gzip", "deflate", "br"})):
+            with rec.span("codecs", attrs={"op": f"negotiate-{name}"}):
+                t0 = time.perf_counter()
+                for b in blobs:
+                    optimize_compression(b, "gzip", accepted)
+                out[name] = (time.perf_counter() - t0) / len(blobs) * 1e6
+        return out
 
     def stop_server(self) -> dict:
         """Stop the server and reap it; returns its span dump."""

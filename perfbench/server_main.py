@@ -56,11 +56,8 @@ def install_spans(rec: trace.Recorder, sc, lookups: list) -> None:
         return row
 
     def optimize_compression(blob, codec, accepted):
-        attrs = {"op": "negotiate"}
-        with rec.span("codecs", attrs=attrs):
-            out = orig_negotiate(blob, codec, accepted)
-            attrs["codec"] = out[1]
-        return out
+        with rec.span("codecs", attrs={"op": "negotiate"}):
+            return orig_negotiate(blob, codec, accepted)
 
     server.TileHandler.do_GET = do_GET
     containers.get_tile = get_tile
