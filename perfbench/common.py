@@ -41,7 +41,7 @@ def prepare_env(work: str) -> None:
     # Every JVM, the spark-submit launcher included: no hsperfdata in /tmp,
     # and C1-only JIT.  Each run is a fresh, short-lived JVM; with C2 the
     # Spark planning paths keep recompiling for 30+ s on 4 cores and the
-    # numbers drift through the whole run, with C1 they settle in ~10 s.
+    # numbers drift through the whole run, with C1 they settle in ~30 s.
     os.environ["JAVA_TOOL_OPTIONS"] = f"-XX:-UsePerfData -XX:TieredStopAtLevel=1 -Djava.io.tmpdir={tmp}"
     os.environ.setdefault("PYSPARK_PYTHON", sys.executable)
     import tempfile
@@ -204,8 +204,8 @@ def measure_ops(w, seconds: float, min_ops: int = 1) -> dict:
     """Repeat `w.op()` until `seconds` of measured time and at least
     `min_ops` operations; end-to-end metrics over the operations (each a
     dict of seconds, items, out_bytes, in_bytes, errors).  `p50_ms` is the
-    median operation, `throughput_per_s` is items over the summed wall
-    times of the same operations."""
+    median operation's wall time, `throughput_per_s` the median of the
+    operations' items per second, so one slow operation moves neither."""
     ops = []
     while len(ops) < min_ops or sum(o["seconds"] for o in ops) < seconds:
         ops.append(w.op())
@@ -215,7 +215,7 @@ def measure_ops(w, seconds: float, min_ops: int = 1) -> dict:
         "errors": [e for o in ops for e in o["errors"]],
         "failed": sum(1 for o in ops if o["errors"]),
         "metrics": {
-            "throughput_per_s": sum(o["items"] for o in ops) / sum(o["seconds"] for o in ops),
+            "throughput_per_s": statistics.median(o["items"] / o["seconds"] for o in ops),
             "p50_ms": statistics.median(walls),
             "bytes_per_byte": sum(o["out_bytes"] for o in ops) / sum(o["in_bytes"] for o in ops),
         },

@@ -6,10 +6,13 @@ relation (perfbench/server_main.py).
 Traffic (sources in README.md): keys are Zipf-skewed over every z0..MAX_ZOOM
 key, so requests for keys the archive lacks get 404, and each request
 carries one of three Accept-Encoding headers that real clients send by
-default.  Phase 1 is an open loop of Poisson arrivals at OPEN_RATE_PER_CORE
-x nproc requests/s (about a quarter of what the warm server sustains), each
-request timed from its due time.  Phase 2 is a closed loop of nproc clients.  One
-process drives both, with at most nproc threads.
+default.  After a warm-up, the run alternates two phases in ROUND_S-long
+rounds: an open loop of Poisson arrivals at OPEN_RATE_PER_CORE x nproc
+requests/s (about a quarter of what the warm server sustains), each
+request timed from its due time, then a closed loop of nproc clients.
+Each metric is the median over the rounds, so a stall of the host that
+spans fewer than half of them does not move it.  One process drives both
+phases, with at most nproc threads.
 
 Output check: a 200 body, decoded per its Content-Encoding, must equal the
 archive's MVT payload for that key; a 404 is correct only for keys outside
@@ -24,6 +27,7 @@ import gzip
 import http.client
 import json
 import os
+import statistics
 import subprocess
 import sys
 import threading
@@ -43,9 +47,10 @@ ZIPF_S = (0.64 + 0.83) / 2
 # and of curl (none); drawn with equal odds.
 ENCODINGS = ("gzip, deflate, br", "gzip", None)
 OPEN_RATE_PER_CORE = 1.5
-OPEN_SHARE = 0.6  # of --seconds; the rest is the closed loop
+OPEN_SHARE = 0.6  # of each round; the rest is the closed loop
+ROUND_S = 5.0
 READY_TIMEOUT_S = 150
-WARM_UP_S = 10.0
+WARM_UP_S = 25.0
 
 
 # ---------------------------------------------------------------------------
@@ -223,13 +228,13 @@ class Serve:
         r.end = time.monotonic()
         return r
 
-    def open_loop(self, seconds: float) -> list[Result]:
+    def open_loop(self, seconds: float, block: int = 0) -> list[Result]:
         n_threads = common.nproc()
         rate = OPEN_RATE_PER_CORE * n_threads
-        rng = inputs.rng_for(self.ctx.seed, "arrivals")
+        rng = inputs.rng_for(self.ctx.seed, f"arrivals-{block}")
         gaps = rng.exponential(1.0 / rate, size=int(rate * seconds * 2) + 10)
         offsets = np.cumsum(gaps)
-        offsets = offsets[offsets < seconds]
+        offsets = offsets[: max(1, int((offsets < seconds).sum()))]
         requests = [self.traffic.next() for _ in offsets]
         t0 = time.monotonic() + 0.05
         results: list = [None] * len(offsets)
@@ -252,19 +257,26 @@ class Serve:
         return results
 
     def closed_loop(self, seconds: float) -> tuple[list[Result], float]:
+        """Every response, and the responses per second: the sum over the
+        clients of each one's responses over the time to its last one, so
+        the requests still in flight at `seconds` add no edge noise."""
         results: list = []
+        rates: list = []
         lock = threading.Lock()
         t0 = time.monotonic()
         end = t0 + seconds
 
         def worker():
+            mine = []
             while time.monotonic() < end:
-                r = self._do(*self.traffic.next(), time.monotonic())
-                with lock:
-                    results.append(r)
+                mine.append(self._do(*self.traffic.next(), time.monotonic()))
+            with lock:
+                results.extend(mine)
+                if mine:
+                    rates.append(len(mine) / (mine[-1].end - t0))
 
         self._run_threads(worker, common.nproc())
-        return results, time.monotonic() - t0
+        return results, sum(rates)
 
     @staticmethod
     def _run_threads(fn, n: int) -> None:
@@ -291,22 +303,29 @@ class Serve:
 
     def measure(self, seconds: float) -> dict:
         warm = self.warm_up()
-        opened = self.open_loop(seconds * OPEN_SHARE)
-        closed, elapsed = self.closed_loop(seconds * (1.0 - OPEN_SHARE))
-        lat = [(r.end - r.due) * 1e3 for r in opened]
+        n_rounds = max(1, round(seconds / ROUND_S)) | 1  # odd: the median is one round
+        opened, closed, p50s, rates = [], [], [], []
+        for i in range(n_rounds):
+            res = self.open_loop(seconds / n_rounds * OPEN_SHARE, block=i)
+            p50s.append(statistics.median((r.end - r.due) * 1e3 for r in res))
+            opened += res
+            res, rate = self.closed_loop(seconds / n_rounds * (1.0 - OPEN_SHARE))
+            rates.append(rate)
+            closed += res
         ok = [r for r in opened + closed if r.status == 200]
         checked = warm + opened + closed
         errors = self.check(checked)
         repeat, miss = stream_shares(checked, self.tiles)
-        print(f"serve: {len(checked)} requests, repeat-key share {repeat:.3f}, 404 share {miss:.3f}",
-              file=sys.stderr)
+        print(f"serve: {len(checked)} requests, repeat-key share {repeat:.3f}, 404 share {miss:.3f}; "
+              f"rounds: p50 ms {' '.join(f'{x:.0f}' for x in p50s)}, "
+              f"closed-loop 1/s {' '.join(f'{x:.1f}' for x in rates)}", file=sys.stderr)
         return {
             "attempted": len(checked),
             "failed": len(errors),
             "errors": errors,
             "metrics": {
-                "throughput_per_s": len(closed) / elapsed,
-                "p50_ms": common.percentile(lat, 0.5),
+                "throughput_per_s": statistics.median(rates),
+                "p50_ms": statistics.median(p50s),
                 "bytes_per_byte": sum(len(r.body) for r in ok) / sum(len(self.tiles[r.key]) for r in ok),
             },
         }
@@ -322,10 +341,10 @@ class Serve:
             fetch(self.host, self.port, "/status", None)
             status.append((time.perf_counter() - t0) * 1e3)
         blocks = {"off": [], "on": []}
-        for mode in ("off", "on", "on", "off"):
+        for i, mode in enumerate(("off", "on", "on", "off")):
             self._send(f"trace {mode}")
             rec.enabled = mode == "on"
-            blocks[mode] += self.open_loop(seconds / 4)
+            blocks[mode] += self.open_loop(seconds / 4, block=i)
         rec.enabled = True
         dump = self.stop_server()
         rec.extend(dump["spans"])
